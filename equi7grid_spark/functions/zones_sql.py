@@ -11,9 +11,8 @@ the per-cell candidate/edge structure as inline VALUES tables and the
 parity test becomes a join + COUNT(*) FILTER ... % 2.
 
 This module emits that SQL, term for term in the same double
-arithmetic as zones_pip._numpy_parity / operators.assign_jvm
-.pip_resolve_col / jvm ZoneData.parity (all three pinned equal by
-tests/test_assign_jvm.py):
+arithmetic as zones_pip._numpy_parity / jvm ZoneData.parity (both
+pinned equal by tests/test_assign_jvm.py):
 
 - edge endpoints and reference points are emitted with repr()
   (shortest round-trip — DuckDB parses back the identical double), so
@@ -90,7 +89,7 @@ def resolve_zone_sql(src: str, id_col: str) -> str:
     digits = decided_digit_string()
     cands, edges = _boundary_values()
     i = id_col
-    # x_int / y_int reproduce pip_resolve_col's guarded-division order:
+    # x_int / y_int reproduce ZoneData.parity's guarded-division order:
     # x1 + (lat - y1) * dx / (dy == 0 ? 1 : dy)
     x_int = (
         "e.x1 + (p.lat - e.y1) * (e.x2 - e.x1)"

@@ -4,11 +4,11 @@ Ships as ``spark-submit --py-files equi7grid_spark.zip
 equi7grid_spark/jobs/assign_and_join.py --input <images parquet>``
 (north rule: packaged job, resumable, lineage-checkpointed).
 
-Pipeline: images table → zone PIP + AEQD forward (one Arrow pass,
-int8 zone codes) → T6/T3/T1 tile keys (pure Columns) → broadcast join
-against the tile catalog (covers_land) → per-tile counts on int keys →
-optional iceberg-lite partitioned sink with per-partition lineage +
-resume.
+Pipeline: images table → one compiled kernel call per row (zone
+resolve + AEQD forward + tile keying, operators/assign_jvm) → per-tile
+counts on a packed long key → broadcast join against the tile catalog
+(covers_land) → optional iceberg-lite partitioned sink with
+per-partition lineage + resume.
 
 Skew handling: the output shuffle keys on (zc, tx, ty) — ~10^3-10^5
 distinct tiles; hot continental zones are split by tile, and AQE skew
@@ -29,7 +29,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from equi7grid_spark.operators.assign import tile_counts  # noqa: E402
 from equi7grid_spark.operators.assign_jvm import tile_counts_jvm  # noqa: E402
 from equi7grid_spark.operators.join import join_tile_catalog  # noqa: E402
 from equi7grid_spark.session import get_spark  # noqa: E402
@@ -43,7 +42,6 @@ def run(
     output_root: str | None = None,
     *,
     resume: bool = True,
-    engine: str = "jvm",
     incremental_commit: bool = False,
 ) -> dict:
     t0 = time.time()
@@ -52,12 +50,7 @@ def run(
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     images = spark.read.parquet(input_path)
-    # engine="jvm": broadcast cell map + Column Vincenty for 99.5% of
-    # rows, exact pandas PIP only for 1-degree boundary cells
-    # (operators/assign_jvm; parity pinned by tests/test_assign_jvm.py).
-    # engine="pandas": the round-1 all-rows Arrow-UDF path.
-    counter = tile_counts_jvm if engine == "jvm" else tile_counts
-    counts = counter(images, tiling_id=tiling_id)
+    counts = tile_counts_jvm(images, tiling_id=tiling_id)
     joined = join_tile_catalog(counts, spark, tiling_id, how="left")
 
     if output_root:

@@ -6,10 +6,9 @@ import org.apache.spark.sql.api.java.UDF3;
 /**
  * (lon, lat, tile size m) -> packed zone+tile key of the PROJECTION
  * ROUNDTRIP forward(inverse(forward(lon, lat))), or null when the
- * point is outside every zone:
- *   (zc << 28) | ((tx + 8192) << 14) | (ty + 8192)
- * with tx = floor(x2 / ts) in the zone's AEQD meters after the
- * fwd -> inv -> fwd closure.
+ * point is outside every zone (same key layout and input contract as
+ * ZoneTileKey), with tx = floor(x2 / ts) in the zone's AEQD meters
+ * after the fwd -> inv -> fwd closure.
  *
  * Fused kernel for the roundtrip-closure query: the same three
  * Vincenty.forward/inverse calls the separate equi7_xy /
@@ -32,8 +31,6 @@ public class RoundtripZoneTileKey implements UDF3<Double, Double, Double, Long>,
         // scalar args are read before the array is overwritten
         Vincenty.inverse(zc, out[0], out[1], out);
         Vincenty.forward(zc, out[0], out[1], out);
-        long tx = (long) Math.floor(out[0] / ts);
-        long ty = (long) Math.floor(out[1] / ts);
-        return ((long) zc << 28) | ((tx + 8192L) << 14) | (ty + 8192L);
+        return ZoneTileKey.pack(zc, out[0], out[1], ts);
     }
 }

@@ -6,8 +6,8 @@ package equi7;
  * Exact transliteration of the engine's NumPy kernel
  * (equi7grid_spark/geodesy.py geodesic_inverse/aeqd_forward): same
  * formulae, same tol=1e-13 lambda fixed-point, same coincident-point
- * guard -- so the compiled kernel and the pandas path agree to float64
- * round-off (pinned < 1e-8 m by tests/test_assign_jvm.py).
+ * guard -- so the compiled kernel and the NumPy reference agree to
+ * float64 round-off (pinned < 1e-8 m by tests/test_assign_jvm.py).
  *
  * Zone constants reproduce the published Equi7Grid definitions
  * (reference _create_grids.py:44-91), order AF AN AS EU OC NA SA.
@@ -92,8 +92,7 @@ final class Vincenty {
      *  the zone center along azimuth atan2(dx, dy) for distance
      *  hypot(dx, dy)); writes {lon, lat} into out. Exact
      *  transliteration of geodesy.geodesic_direct (same tol=1e-13
-     *  sigma fixed-point, same closing formulae) -- the compiled twin
-     *  of functions/geodesy_cols.with_aeqd_inverse. */
+     *  sigma fixed-point, same closing formulae). */
     static void inverse(int zc, double x, double y, double[] out) {
         double dx = x - X0[zc], dy = y - Y0[zc];
         double s = Math.hypot(dx, dy);

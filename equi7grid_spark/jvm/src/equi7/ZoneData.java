@@ -13,8 +13,8 @@ import java.nio.ByteOrder;
  * local edge lists. Mirrors zones.decided_cell_codes and
  * zones_pip.boundary_cands exactly -- including the even-odd parity
  * arithmetic (zones_pip._numpy_parity), so the compiled resolver and
- * the Python/Column paths agree bit-for-bit away from measure-zero
- * edge ties.
+ * the NumPy reference agree bit-for-bit away from measure-zero edge
+ * ties.
  */
 final class ZoneData {
     static final int NX = 360, NY = 180;
@@ -62,8 +62,13 @@ final class ZoneData {
 
     private ZoneData() {}
 
-    /** Primary zone code for (lon, lat); -1 if out of every zone. */
-    static int zoneCode(double lon, double lat) {
+    /** Primary zone code for (lon, lat); -1 if out of every zone.
+     *  A null, NaN or +-inf lon or lat is out of every zone, like the
+     *  NumPy reference (zones.assign_primary_zone_code). */
+    static int zoneCode(Double lon, Double lat) {
+        if (lon == null || lat == null || !Double.isFinite(lon) || !Double.isFinite(lat)) {
+            return -1;
+        }
         double lonN = ((lon + 180.0) % 360.0 + 360.0) % 360.0 - 180.0;
         double latC = Math.min(90.0, Math.max(-90.0, lat));
         int ix = (int) Math.min(NX - 1, Math.max(0, Math.floor(lonN + 180.0)));

@@ -1,33 +1,26 @@
-"""JVM-only tile assignment: broadcast lookups + Column algebra.
+"""Tile assignment on the compiled kernel: zero Python, zero joins.
 
 The scale path for the flagship job (north rule: 10^12-row image table,
-N→4N scaling ≥ 0.8). The round-1 flagship ran every row through a
-pandas UDF (exact PIP + NumPy Vincenty) — correct, but the Python
-worker fraction caps multi-core scaling (each task slot needs a JVM
-reader thread *and* a python worker). This path has NO Python at all:
+N→4N scaling ≥ 0.8). Every row makes ONE compiled call
+(operators/kernel) that resolves its primary zone (1-degree cell map +
+exact boundary parity baked into the jar) and projects it to the zone's
+AEQD meters:
 
-1. every row computes its 1-degree cell id (pure Columns) and
-   broadcast-joins the 64,800-row decided-cell map
-   (zones.decided_cell_codes): 95.8% of cells — 99.5% of land-biased
-   rows — resolve their primary zone right there;
-2. rows in prefilter-boundary cells resolve via the second broadcast
-   map (zones_pip.boundary_cands): exact even-odd parity from a
-   per-cell reference point + tiny local edge lists, evaluated with
-   F.aggregate — lazily, only on the when() branch for boundary rows;
-3. every in-zone row projects with the unrolled Column Vincenty
-   (functions/geodesy_cols.with_aeqd_forward);
-4. tile_counts_jvm reduces to compact int keys (zc, tx, ty) with
-   map-side partial aggregation — the groupBy is the plan's ONLY
-   data shuffle (pinned by tests/test_queries_scale.py).
+- tile_counts_jvm keys each row with equi7_zone_tile_key and reduces
+  the single packed long with map-side partial aggregation — the
+  groupBy is the plan's ONLY shuffle (pinned by
+  tests/test_queries_scale.py); zone/tilename strings materialize
+  post-agg on ~10^3 rows;
+- assign_tiles_jvm keeps row level: equi7_zone_xy gives (zc, x, y) and
+  the tile columns are plain Column algebra — one scan, no join, no
+  shuffle (pinned by tests/test_assign_jvm.py).
 
-One scan, two broadcast hash joins (~2 MB total build side), zero
-Python workers, zero extra shuffles. Zone/tilename strings
-materialize post-agg on ~10^3 rows, exactly like
-operators/assign.tile_counts.
+Both agree with the NumPy reference (zones.assign_primary_zone_code +
+geodesy.aeqd_forward) per tile, pinned by tests/test_assign_jvm.py on
+the sf tables and on grids that oversample boundary cells.
 
-Semantics parity is pinned by tests/test_assign_jvm.py: identical
-per-tile counts/assignments vs the pandas path on the sf tables and
-on grids that oversample boundary cells.
+The decided-cell map helpers (cell_code_pdf, cell_map_df, cell_id_col)
+serve the decided-subset queries and their DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -37,137 +30,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER, TILING_ID_TO_SIZE
-from equi7grid_spark.functions.geodesy_cols import with_aeqd_forward
 from equi7grid_spark.functions.tiling import tile_ll, tilename, xy2rc
+from equi7grid_spark.operators import kernel
 from equi7grid_spark.operators.assign import subgrid_from_code
 from equi7grid_spark.zones import PF_NX, PF_NY, decided_cell_codes
 
 _CELL_MAPS: dict[tuple, pd.DataFrame] = {}
-
-_CANDS_SCHEMA = (
-    "cell_id int, cands array<struct<zc: tinyint, ref_par: boolean, "
-    "refx: double, refy: double, "
-    "edges: array<struct<x1: double, y1: double, x2: double, y2: double>>>>"
-)
-
-
-_CANDS_DFS: dict[tuple, DataFrame] = {}
-
-
-def boundary_cands_df(
-    spark: SparkSession, system_order: tuple[str, ...] = DEFAULT_SYSTEM_ORDER
-) -> DataFrame:
-    """2,701-row broadcast map: boundary cell -> ordered zone candidates
-    with per-cell pruned edge lists + reference parity (zones_pip).
-    Cached per (session, order): the driver-side Python->JVM conversion
-    of ~50k nested edge tuples costs seconds and must not recur per
-    query."""
-    from equi7grid_spark.zones_pip import boundary_cands
-
-    key = (id(spark), tuple(system_order))
-    hit = _CANDS_DFS.get(key)
-    if hit is not None:
-        return hit
-    rows = [
-        (
-            c["cell_id"],
-            [
-                (
-                    cand["zc"],
-                    cand["ref_par"],
-                    cand["refx"],
-                    cand["refy"],
-                    [tuple(e) for e in cand["edges"].tolist()],
-                )
-                for cand in c["cands"]
-            ],
-        )
-        for c in boundary_cands(tuple(system_order))
-    ]
-    df = spark.createDataFrame(rows, _CANDS_SCHEMA)
-    _CANDS_DFS[key] = df
-    return df
-
-
-def pip_resolve_col(cands: Column, lon: Column, lat: Column) -> Column:
-    """Primary zone code (tinyint, null = none) for a boundary-cell
-    point, all in Column algebra. Parity of P = precomputed parity of
-    the cell's reference point R, XOR crossings of the axis-parallel
-    path R -> (R.x, P.y) -> P — per-edge arithmetic mirrors
-    zones_pip._numpy_parity exactly (validated there vs the full
-    even-odd kernel)."""
-
-    def inside(c: Column) -> Column:
-        refx, refy = c["refx"], c["refy"]
-        xlo, xhi = F.least(lon, refx), F.greatest(lon, refx)
-        ylo, yhi = F.least(lat, refy), F.greatest(lat, refy)
-
-        def flip(acc: Column, e: Column) -> Column:
-            dy = e["y2"] - e["y1"]
-            dx = e["x2"] - e["x1"]
-            x_int = e["x1"] + (lat - e["y1"]) * dx / F.when(
-                dy == 0.0, F.lit(1.0)
-            ).otherwise(dy)
-            y_int = e["y1"] + (refx - e["x1"]) * dy / F.when(
-                dx == 0.0, F.lit(1.0)
-            ).otherwise(dx)
-            h = (
-                ((e["y1"] > lat) != (e["y2"] > lat))
-                & (xlo < x_int)
-                & (x_int <= xhi)
-            )
-            v = (
-                ((e["x1"] > refx) != (e["x2"] > refx))
-                & (ylo < y_int)
-                & (y_int <= yhi)
-            )
-            return acc != (h != v)
-
-        return c["ref_par"] != F.aggregate(c["edges"], F.lit(False), flip)
-
-    return F.get(F.filter(cands, inside), 0)["zc"]
-
-
-def with_zone_code_jvm(
-    df: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    zc_col: str = "zc",
-    *,
-    system_order=DEFAULT_SYSTEM_ORDER,
-) -> DataFrame:
-    """Adds the primary zone code as `zc_col` (tinyint, null = out of
-    every zone) in one pass: broadcast cell-map join decides 95.8% of
-    cells; boundary cells resolve via pip_resolve_col. Zero Python,
-    zero shuffles."""
-    order = tuple(system_order)
-    spark = df.sparkSession
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    d = df.withColumn("__cell", cell_id_col(lon, lat))
-    cells = cell_map_df(spark, order).withColumnRenamed("cell_id", "__cell")
-    cands = (
-        boundary_cands_df(spark, order)
-        .withColumnRenamed("cell_id", "__cell")
-        .withColumnRenamed("cands", "__cands")
-    )
-    d = d.join(F.broadcast(cells), "__cell").join(
-        F.broadcast(cands), "__cell", "left"
-    )
-    zc_final = (
-        F.when(F.col("zc") >= 0, F.col("zc"))
-        .when(F.col("zc") == -2, pip_resolve_col(F.col("__cands"), lon, lat))
-        .otherwise(F.lit(None).cast("tinyint"))
-    )
-    # Explode-of-one-element barrier: both CollapseProject and
-    # PushDownPredicate freely substitute a Project alias into
-    # downstream filters/projections, which would re-evaluate this
-    # expression (its higher-order functions are CodegenFallback —
-    # interpreted) once per consumer, measured 5x slower end-to-end.
-    # Neither rule rewrites through a Generate, so the zone code
-    # materializes exactly once per row.
-    barrier = F.explode(F.array(zc_final))
-    keep = [c for c in d.columns if c not in ("__cell", "__cands", "zc")]
-    return d.select(*keep, barrier.alias(zc_col))
 
 
 def cell_code_pdf(system_order: tuple[str, ...] = DEFAULT_SYSTEM_ORDER) -> pd.DataFrame:
@@ -224,100 +92,20 @@ def tile_counts_jvm(
     lon_col: str = "lon",
     lat_col: str = "lat",
     tiling_id: str = "T6",
-    *,
-    system_order=DEFAULT_SYSTEM_ORDER,
 ) -> DataFrame:
-    """Per-tile counts with the same output schema/values as
-    operators/assign.tile_counts, 100% JVM-side.
+    """Per-tile counts (subgrid, tilename, ll_x, ll_y, n) of the rows'
+    primary-zone tiles; out-of-zone rows (null, NaN, ±inf coordinates
+    included) are not counted.
 
-    Two-branch shape over one broadcast-joined source (each branch
-    filters on a PLAIN join attribute, so no expensive expression is
-    duplicated by predicate pushdown):
-
-    1. decided-cell rows (99.5% of land-biased data) derive their
-       packed tile key with the compiled Vincenty kernel
-       (operators/kernel, one JIT-hot method/row) — or the unrolled
-       Column Vincenty when the jar is unavailable;
-    2. prefilter-boundary cells resolve their zone with the exact
-       Column parity test (zones_pip), then the same projection.
-
-    Both branches reduce to compact int keys with map-side partial
-    aggregation before the single union+shuffle; zone/tilename strings
-    materialize post-agg on ~10^3 rows. The two pruned scans cost
-    2 x (lon, lat) — a sliver of a bytes-dominated image table at
-    100 TB. Key parity with the exact pandas path is pinned by
-    tests/test_assign_jvm.py."""
+    One compiled call per row (zone resolve + Vincenty + floor keying),
+    one shuffle on a single long key with map-side partial aggregation;
+    zone/tilename strings materialize post-agg on ~10^3 rows."""
     ts = float(TILING_ID_TO_SIZE[tiling_id])
-    order = tuple(system_order)
-    spark = df.sparkSession
-    lon, lat = F.col(lon_col), F.col(lat_col)
-
-    from equi7grid_spark.operators import kernel
-
-    if kernel.kernel_available(spark) and order == DEFAULT_SYSTEM_ORDER:
-        # one-call kernel: zone resolve + Vincenty + floor keying in a
-        # single compiled function (zone data baked into the jar) —
-        # one scan, zero joins, one shuffle on a single long key
-        # explode-of-one barrier: the isNotNull filter would otherwise be
-        # pushed down as a second evaluation of the (deterministic) UDF
-        keyed = df.select(
-            F.explode(F.array(kernel.zone_tile_key_col(lon, lat, ts))).alias("ztkey")
-        ).filter(F.col("ztkey").isNotNull())
-        agg = (
-            keyed.groupBy("ztkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                kernel.unpack_zc(F.col("ztkey")).alias("zc"),
-                kernel.unpack_tx(F.col("ztkey")).alias("tx"),
-                kernel.unpack_ty(F.col("ztkey")).alias("ty"),
-                "n",
-            )
-        )
-    else:
-        # pure Column fallback: broadcast cell-map join + unrolled
-        # Column Vincenty (fast branch) and exact parity resolve
-        # (boundary branch), partial-aggregated before one union+shuffle
-        base = df.select(lon, lat).withColumn("__cell", cell_id_col(lon, lat))
-        joined = base.join(
-            F.broadcast(
-                cell_map_df(spark, order).withColumnRenamed("cell_id", "__cell")
-            ),
-            "__cell",
-        )
-
-        def keys(frame: DataFrame) -> DataFrame:
-            proj = with_aeqd_forward(
-                frame, "zc", lon_col, lat_col, "_jx", "_jy",
-                system_order=order, carry=["zc"],
-            )
-            return proj.select(
-                "zc",
-                F.floor(F.col("_jx") / ts).cast("long").alias("tx"),
-                F.floor(F.col("_jy") / ts).cast("long").alias("ty"),
-            )
-
-        fast = joined.filter(F.col("zc") >= 0).drop("__cell")
-        cands = (
-            boundary_cands_df(spark, order)
-            .withColumnRenamed("cell_id", "__cell")
-            .withColumnRenamed("cands", "__cands")
-        )
-        bnd = (
-            joined.filter(F.col("zc") == -2)
-            .select(lon, lat, "__cell")
-            .join(F.broadcast(cands), "__cell")
-            .select(
-                lon,
-                lat,
-                F.explode(
-                    F.array(pip_resolve_col(F.col("__cands"), lon, lat))
-                ).alias("zc"),
-            )
-            .filter(F.col("zc").isNotNull())
-        )
-        keyed = keys(fast).unionAll(keys(bnd))
-        agg = keyed.groupBy("zc", "tx", "ty").agg(F.count(F.lit(1)).alias("n"))
-    sub = subgrid_from_code(F.col("zc"), order)
+    kernel.kernel_available(df.sparkSession)  # registers the jar's functions
+    agg = kernel.key_counts(
+        df, kernel.zone_tile_key_col(F.col(lon_col), F.col(lat_col), ts)
+    )
+    sub = subgrid_from_code(F.col("zc"))
     name = tilename(sub, F.col("tx") * ts, F.col("ty") * ts, tiling_id)
     return agg.select(
         sub.alias("subgrid"),
@@ -335,53 +123,32 @@ def assign_tiles_jvm(
     tiling_id: str = "T6",
     sampling: float | None = None,
     *,
-    system_order=DEFAULT_SYSTEM_ORDER,
     drop_out_of_zone: bool = True,
 ) -> DataFrame:
-    """Row-level assign_tiles with the JVM fast path (non-buffered).
+    """Row-level zone assign + AEQD project + tile id (primary zone).
 
-    Same added columns as operators/assign.assign_tiles(buffered=False):
-    subgrid, x, y, ll_x, ll_y, tilename (+ row, col with `sampling`).
-    Single pass, zero Python, zero shuffles.
+    Adds columns subgrid, x, y, ll_x, ll_y, tilename (+ row, col with
+    `sampling`). Out-of-zone rows (null, NaN, ±inf coordinates
+    included) are dropped, or kept with a null subgrid and NaN x/y when
+    ``drop_out_of_zone=False``. One compiled call per row; no join, no
+    shuffle, no Python worker.
     """
     ts = float(TILING_ID_TO_SIZE[tiling_id])
-    order = tuple(system_order)
-
-    from equi7grid_spark.operators import kernel
-
-    use_kernel = kernel.kernel_available(df.sparkSession) and order == DEFAULT_SYSTEM_ORDER
-
-    def project(frame: DataFrame) -> DataFrame:
-        if use_kernel:
-            k = frame.withColumn(
-                "_xy", kernel.xy_col(F.col("zc"), F.col(lon_col), F.col(lat_col))
-            )
-            return (
-                k.withColumn("x", F.element_at("_xy", 1))
-                .withColumn("y", F.element_at("_xy", 2))
-                .drop("_xy")
-            )
-        return with_aeqd_forward(
-            frame, "zc", lon_col, lat_col, "x", "y", system_order=order
-        )
-
-    out = with_zone_code_jvm(df, lon_col, lat_col, "zc", system_order=order)
+    kernel.kernel_available(df.sparkSession)  # registers the jar's functions
+    zxy = kernel.zone_xy_col(F.col(lon_col), F.col(lat_col))
+    # explode-of-one barrier: filter pushdown and CollapseProject would
+    # otherwise substitute the UDF into every consumer of _z, evaluating
+    # it once per reference instead of once per row
+    out = df.select("*", F.explode(F.array(zxy)).alias("_z"))
     if drop_out_of_zone:
-        out = project(out.filter(F.col("zc") >= 0))
-    else:
-        # Vincenty needs a valid zone index; out-of-zone rows (zc null,
-        # possible only for points exactly on zone edges) get NaN x/y
-        # like the pandas path yields.
-        nan = F.lit(float("nan"))
-        proj = project(out.filter(F.col("zc") >= 0))
-        outside = (
-            out.filter(F.col("zc").isNull())
-            .withColumn("x", nan)
-            .withColumn("y", nan)
-            .select(*proj.columns)
-        )
-        out = proj.unionAll(outside)
-    out = out.withColumn("subgrid", subgrid_from_code(F.col("zc"), order)).drop("zc")
+        out = out.filter(F.col("_z").isNotNull())
+    nan = F.lit(float("nan"))
+    out = (
+        out.withColumn("subgrid", subgrid_from_code(F.col("_z.zc")))
+        .withColumn("x", F.coalesce(F.col("_z.x"), nan))
+        .withColumn("y", F.coalesce(F.col("_z.y"), nan))
+        .drop("_z")
+    )
     out = out.withColumn("ll_x", tile_ll(F.col("x"), ts)).withColumn(
         "ll_y", tile_ll(F.col("y"), ts)
     )

@@ -30,11 +30,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Chains of ~30 narrow Projects (the unrolled Column Vincenty,
-        # functions/geodesy_cols.py) fuse into one whole-stage method far
-        # beyond HotSpot's 8 KB JIT ceiling; such stages run ~5x slower
-        # interpreted. Falling back to per-operator codegen at that
-        # boundary keeps every generated method JIT-compilable.
+        # A whole-stage method past HotSpot's 8 KB JIT ceiling runs
+        # interpreted (measured ~5x slower on a ~30-Project chain);
+        # Spark falls back to per-operator codegen at this size instead,
+        # keeping every generated method JIT-compilable. Its effect on
+        # the engine's current stages has not been measured.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")

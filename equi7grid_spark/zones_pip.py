@@ -22,10 +22,11 @@ computed once, exactly, with geom.points_in_polys. Ties (a data point
 exactly on a polygon edge) remain measure-zero as in every even-odd
 test in this engine.
 
-Validated two ways (tests/test_assign_jvm.py): a NumPy twin of the
-Column formulas (`_numpy_parity`, used to certify the structure
-against zones.zone_membership on every boundary cell) and Spark-level
-parity of the full assignment against the pandas path.
+Validated two ways: a NumPy twin of the compiled parity
+(`_numpy_parity`, used to certify the structure against
+zones.zone_membership on every boundary cell), and the jar's
+resolver (ZoneData.parity, built from this structure) against the
+NumPy reference in every boundary cell (tests/test_assign_jvm.py).
 """
 
 from __future__ import annotations
@@ -201,7 +202,8 @@ def membership_numpy(
 
 
 def _numpy_parity(cand: dict, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
-    """NumPy twin of the Column parity test (for validation/tests)."""
+    """NumPy twin of the compiled parity test, ZoneData.parity (for
+    validation/tests)."""
     e = cand["edges"]
     refx, refy = cand["refx"], cand["refy"]
     par = np.full(X.shape, cand["ref_par"], dtype=bool)

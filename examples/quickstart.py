@@ -149,23 +149,17 @@ def spark_flows() -> None:
     kept = hashed.join(noncanon, "image_id", "left_anti")
     print(f"canonical images kept: {kept.count()} of {both.count()}")
 
-    # -- inverse projection at table scale (round 4): xy -> lonlat as
-    #    JVM Columns; the forward-inverse roundtrip closes
-    from equi7grid_spark.functions.geodesy_cols import with_aeqd_inverse
+    # -- inverse projection at table scale: xy -> lonlat with the
+    #    compiled kernel; the forward-inverse roundtrip closes
+    from equi7grid_spark.operators import kernel
 
     order = ("AF", "AN", "AS", "EU", "OC", "NA", "SA")
-    pts = assigned.select(
-        (
-            F.array_position(
-                F.array(*[F.lit(c) for c in order]), F.col("subgrid")
-            )
-            - 1
-        ).cast("tinyint").alias("zc"),
-        "x", "y",
+    zc = F.array_position(F.array(*[F.lit(c) for c in order]), F.col("subgrid")) - 1
+    inv = assigned.limit(1000).select(
         F.col("lon").alias("lon0"),
         F.col("lat").alias("lat0"),
-    ).limit(1000)
-    inv = with_aeqd_inverse(pts, carry=["lon0", "lat0"])
+        kernel.lonlat_col(zc, F.col("x"), F.col("y")).alias("ll"),
+    ).select("lon0", "lat0", F.col("ll")[0].alias("lon"), F.col("ll")[1].alias("lat"))
     dlon_raw = F.abs(F.col("lon") - F.col("lon0"))
     row = inv.agg(
         F.max(F.least(dlon_raw, 360.0 - dlon_raw)).alias("dlon"),

@@ -1,6 +1,10 @@
 """Dump the physical plans of the engine's key pipelines to
 docs/PLANS.md — the scale-design evidence trail (.explain output:
-pruned scans, single Arrow pass, broadcast joins, int-keyed shuffles).
+pruned scans, one compiled kernel call per row, broadcast joins,
+int-keyed shuffles).
+
+Run: ``python scripts/dump_plans.py`` (local[4], reads the sf0.001
+test tables).
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F  # noqa: E402
 
 from equi7grid_spark.images import synthetic_images  # noqa: E402
-from equi7grid_spark.operators.assign import assign_tiles, tile_counts  # noqa: E402
+from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm, tile_counts_jvm  # noqa: E402
 from equi7grid_spark.operators.join import join_tile_catalog, knn_tiles  # noqa: E402
 from equi7grid_spark.session import get_spark  # noqa: E402
 
@@ -37,12 +41,14 @@ def main() -> None:
 
     sections = []
 
-    counts = tile_counts(images)
+    counts = tile_counts_jvm(images)
     sections.append((
-        "Flagship: tile_counts (zone UDF → int-keyed agg → post-agg naming)",
-        "One pruned scan (lon/lat only), ONE ArrowEvalPython, partial+final "
-        "hash aggregate on (zc, tx, ty) ints; tilename formatted on the "
-        "~10^3-row aggregate.",
+        "Flagship: tile_counts_jvm (one compiled call per row)",
+        "One pruned scan (lon/lat), zone resolve + Vincenty + tile keying "
+        "in ONE compiled kernel call per row (equi7_zone_tile_key), "
+        "partial+final hash aggregate on the packed long key; tilename "
+        "formatted on the ~10^3-row aggregate. No join, no "
+        "ArrowEvalPython/BatchEvalPython node.",
         plan_of(counts),
     ))
 
@@ -53,7 +59,15 @@ def main() -> None:
         plan_of(joined),
     ))
 
-    assigned = assign_tiles(images, tiling_id="T6")
+    assigned = assign_tiles_jvm(images, tiling_id="T6")
+    sections.append((
+        "Row-level assignment: assign_tiles_jvm",
+        "One scan, one compiled equi7_zone_xy call per row (behind an "
+        "explode-of-one Generate so it runs once per row), tile columns "
+        "as Column algebra — no join, no exchange, no Python.",
+        plan_of(assigned),
+    ))
+
     pts = assigned.select(F.col("image_id").alias("pt_id"), "subgrid", "x", "y")
     kn = knn_tiles(pts, spark, "T6", k=3)
     sections.append((
@@ -61,19 +75,6 @@ def main() -> None:
         "Fan-out bounded at 9 candidate tiles per point before the "
         "row_number window.",
         plan_of(kn),
-    ))
-
-    from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
-
-    counts_jvm = tile_counts_jvm(images)
-    sections.append((
-        "Flagship round 2: tile_counts_jvm (zero Python workers)",
-        "One pruned scan (lon/lat), zone resolve + Vincenty + tile "
-        "keying JVM-side (compiled kernel call, or broadcast cell-map "
-        "join + unrolled Column Vincenty fallback), partial+final agg "
-        "on a packed key — no ArrowEvalPython/BatchEvalPython node "
-        "anywhere in this plan.",
-        plan_of(counts_jvm),
     ))
 
     from equi7grid_spark.queries import queries
@@ -93,9 +94,8 @@ def main() -> None:
     sections.append((
         "Decided-cell tile assignment (the DuckDB-oracled geodesic core)",
         "Broadcast 64,800-row cell map join decides the zone; the AEQD "
-        "forward is the unrolled Column Vincenty — a linear chain of "
-        "narrow Projects, no Python, one aggregation shuffle on "
-        "(zc, tx, ty) ints.",
+        "forward is one compiled equi7_xy call per row — no Python, one "
+        "aggregation shuffle on (zc, tx, ty) ints.",
         plan_of(dec),
     ))
 
@@ -174,13 +174,10 @@ def main() -> None:
     rt = queries()["tile_roundtrip_t6_counts"](spark, "/root/testdata/sf0.001")
     sections.append((
         "Projection roundtrip (forward -> inverse -> forward, r4)",
-        "The xy->lonlat direction JVM-side: with the kernel jar the "
-        "chain is three compiled calls per row (equi7_xy / equi7_lonlat"
-        " / equi7_xy) over the broadcast zone maps; on kernel-less "
-        "sessions both directions fall back to linear runs of narrow "
-        "Column Projects (with_aeqd_forward / with_aeqd_inverse). No "
-        "Python anywhere, one aggregation shuffle on (zc, tx, ty) ints "
-        "at the end.",
+        "Zone resolve, forward, inverse and forward again in ONE fused "
+        "compiled call per row (equi7_roundtrip_zone_tile_key) — no "
+        "join, no Python, one aggregation shuffle on the packed long "
+        "key at the end.",
         plan_of(rt),
     ))
 

@@ -4,11 +4,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from equi7grid_spark.operators.assign import (
-    assign_tiles,
-    distortion_ellipsoid_udf,
-    inverse_lonlat_udf,
-)
+from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER
+from equi7grid_spark.operators import kernel
+from equi7grid_spark.operators.assign import assign_tiles_buffered, distortion_ellipsoid_udf
+from equi7grid_spark.operators.assign_jvm import assign_tiles_jvm
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +23,7 @@ def points(spark):
 
 
 def test_assign_tiles_goldens(points):
-    out = assign_tiles(points, tiling_id="T6", sampling=500.0).orderBy("id").collect()
+    out = assign_tiles_jvm(points, tiling_id="T6", sampling=500.0).orderBy("id").collect()
     # reference tests/test_equi7grid.py:59-99 projected coords
     assert out[0].subgrid == "EU"
     assert out[0].x == pytest.approx(5138743.127891, abs=1.0)
@@ -41,7 +40,7 @@ def test_assign_tiles_goldens(points):
 
 def test_assign_tiles_buffered_multizone(points):
     out = (
-        assign_tiles(points, tiling_id="T6", buffered=True)
+        assign_tiles_buffered(points, tiling_id="T6")
         .filter(F.col("id") == 5)
         .orderBy("subgrid")
         .collect()
@@ -51,9 +50,10 @@ def test_assign_tiles_buffered_multizone(points):
 
 
 def test_inverse_roundtrip_spark(points):
-    df = assign_tiles(points, tiling_id="T6")
-    inv = df.withColumn("ll", inverse_lonlat_udf(F.col("subgrid"), F.col("x"), F.col("y")))
-    rows = inv.select("lon", "lat", "ll.lon", "ll.lat").collect()
+    df = assign_tiles_jvm(points, tiling_id="T6")
+    zc = F.array_position(F.array(*[F.lit(c) for c in DEFAULT_SYSTEM_ORDER]), F.col("subgrid")) - 1
+    inv = df.withColumn("ll", kernel.lonlat_col(zc, F.col("x"), F.col("y")))
+    rows = inv.select("lon", "lat", F.col("ll")[0], F.col("ll")[1]).collect()
     for lon, lat, lon2, lat2 in rows:
         assert lon2 == pytest.approx(lon, abs=1e-6)
         assert lat2 == pytest.approx(lat, abs=1e-6)
@@ -66,10 +66,10 @@ def test_distortion_udf(spark):
 
 
 def test_out_of_zone_filtered(spark):
-    # no point is outside every zone (partition), but nulls propagate:
-    # synthesize by restricting system order
-    df = spark.createDataFrame([{"lon": 51.12, "lat": 61.71}])
-    out = assign_tiles(df, system_order=("EU",))
-    assert out.count() == 0  # reference GeomOutOfZoneError (:421-428)
-    out = assign_tiles(df, system_order=("EU",), drop_out_of_zone=False)
-    assert out.collect()[0].subgrid is None
+    # the standard zones partition the globe, so out-of-zone points are
+    # the non-finite ones (reference GeomOutOfZoneError, :421-428)
+    df = spark.createDataFrame([(float("nan"), 61.71)], "lon double, lat double")
+    for op in (assign_tiles_jvm, assign_tiles_buffered):
+        assert op(df).count() == 0
+        out = op(df, drop_out_of_zone=False).collect()
+        assert len(out) == 1 and out[0].subgrid is None

@@ -141,18 +141,39 @@ def test_duplicate_clusters_max_iter_semantics(spark):
     assert labs == {i: 0 for i in range(8)}
 
 
-def test_roundtrip_err_buckets_fallback_equals_kernel(spark, monkeypatch):
-    """lonlat_roundtrip_err_buckets must produce identical bucket
-    counts on the compiled-kernel path and the Column-chain fallback —
-    both chains close < 1e-11 deg, two decades inside the first
-    bucket edge, so the integer counts cannot differ."""
-    from equi7grid_spark.operators import kernel
+def test_roundtrip_err_buckets_match_numpy(spark):
+    """lonlat_roundtrip_err_buckets (compiled kernel both ways) must
+    equal the same buckets from the NumPy reference (primary zone,
+    aeqd_forward, aeqd_inverse) over the same points — both close
+    < 1e-11 deg, two decades inside the first bucket edge, so the
+    integer counts cannot differ."""
+    from collections import Counter
 
-    rows = lambda: sorted(
+    import numpy as np
+
+    from equi7grid_spark.constants import DEFAULT_SYSTEM_ORDER
+    from equi7grid_spark.geodesy import aeqd_forward, aeqd_inverse
+    from equi7grid_spark.queries import _derived_lonlat
+    from equi7grid_spark.zones import assign_primary_zone_code
+
+    got = sorted(
         map(tuple, QUERIES["lonlat_roundtrip_err_buckets"](spark, SF).collect())
     )
-    with_kernel = rows()
-    monkeypatch.setattr(kernel, "kernel_available", lambda s: False)
-    assert rows() == with_kernel
+    pdf = _derived_lonlat(spark, SF).toPandas()
+    lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+    zc = assign_primary_zone_code(lon, lat)
+    ref = Counter()
+    for code in np.unique(zc[zc >= 0]):
+        m = zc == code
+        cc = DEFAULT_SYSTEM_ORDER[code]
+        lon2, lat2 = aeqd_inverse(cc, *aeqd_forward(cc, lon[m], lat[m]))
+        err = np.maximum(
+            np.abs(lat2 - lat[m]),
+            np.abs((lon2 - lon[m] + 540.0) % 360.0 - 180.0)
+            * np.cos(np.radians(lat[m])),
+        )
+        for e in err:
+            ref[(cc, "lt_1e9" if e < 1e-9 else "lt_1e7" if e < 1e-7 else "ge_1e7")] += 1
+    assert got == sorted((cc, b, n) for (cc, b), n in ref.items())
     # every point must close under 1e-9 deg — the tripwire is armed
-    assert all(b == "lt_1e9" for (_, b, _n) in with_kernel)
+    assert all(b == "lt_1e9" for (_, b, _n) in got)

@@ -70,19 +70,13 @@ def test_flagship_tile_counts_plan_is_jvm_only(spark):
     from equi7grid_spark.operators.assign_jvm import tile_counts_jvm
     from equi7grid_spark.queries import _derived_lonlat
 
-    from equi7grid_spark.operators import kernel
-
     df = _derived_lonlat(spark, SF)
     plan = _physical(tile_counts_jvm(df))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # exactly one data shuffle (the partial-aggregated groupBy)
     assert plan.count("Exchange hashpartitioning") == 1
-    if kernel.kernel_available(spark):
-        # one-call compiled kernel: no joins at all
-        assert "Join" not in plan
-    else:
-        # Column fallback: broadcast lookup joins only
-        assert "BroadcastHashJoin" in plan
+    # one-call compiled kernel: no joins at all
+    assert "Join" not in plan
 
 
 def test_corpus_curation_plan_shape(spark):
@@ -97,7 +91,7 @@ def test_corpus_curation_plan_shape(spark):
 
 
 def test_decided_tile_assign_plan_is_jvm_only(spark):
-    """The oracled geodesic query: broadcast cell-map join + Column
+    """The oracled geodesic query: broadcast cell-map join + compiled
     Vincenty, zero Python, a single aggregation shuffle."""
     plan = _physical(QUERIES["tile_assign_decided_t6_counts"](spark, SF))
     assert "BroadcastHashJoin" in plan
